@@ -7,14 +7,16 @@ file_output. Every repetition reads a fresh seeded corpus with doc ids
 disjoint from the others and commits a new version of one table.
 
 Each stage is a registered step operator calling the program's public
-function. Untraced, the stages stay lazy and the sink runs the lineage,
-as a user's pipeline would. Traced, each stage's output is materialized
-inside its span so the work lands in the layer that does it.
+function. In measured runs the stages stay lazy and the sink runs the
+lineage, as a user's pipeline would. In the replays of a traced run each
+stage's output is materialized (inside its span when spans are recorded)
+so the work lands in the layer that does it.
 """
 
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -36,6 +38,7 @@ NODES = (
     ("pack", "operators.corpus.pack_sequences"),
 )
 BUDGET = 512
+ALPHA = 0.7
 
 
 def _gate(df, call):
@@ -83,7 +86,7 @@ def _redact(df, call):
 def _mixture(df, call):
     from etl_mark1_spark.operators.corpus import temperature_mixture
 
-    return call(lambda: temperature_mixture(df, alpha=0.7))
+    return call(lambda: temperature_mixture(df, alpha=ALPHA))
 
 
 def _pack(df, call):
@@ -107,13 +110,13 @@ def register(tracer) -> None:
         stage = STAGES[node]
 
         def call(fn):
-            if not tracer.enabled:
+            if not tracer.replaying:
                 return fn()
             with tracer.span(span_name):
                 return fn().localCheckpoint(eager=True)
 
         def step(df, params):
-            if not tracer.enabled:
+            if not tracer.replaying:
                 return stage(df, call)
             with tracer.span("bench.rows"):
                 rows_in = df.count()
@@ -131,13 +134,13 @@ def register(tracer) -> None:
 
 
 def executor(spark, tracer):
-    """A PipelineExecutor; traced, its versioned file_output runs inside a
-    ``sources.versioned.write_version`` span (that is the call the
+    """A PipelineExecutor; in a replay, its versioned file_output runs
+    inside a ``sources.versioned.write_version`` span (that is the call the
     built-in handler makes for ``versioned: true``)."""
     from etl_mark1_spark.plans.dag import PipelineExecutor
 
     ex = PipelineExecutor(spark)
-    if tracer.enabled:
+    if tracer.replaying:
         builtin = ex._exec_file_output
 
         def file_output(node_id, config, inputs):
@@ -169,38 +172,62 @@ def committed_rows(spark, table_dir: str) -> list[dict]:
     return [r.asDict() for r in read_table(spark, table_dir).collect()]
 
 
-def check(corpus: dict, rows: list[dict]) -> list[str]:
-    """Invariant violations of one committed repetition (empty when correct)."""
-    errors = []
+def redacted(text: str) -> str:
+    """``text`` with each planted PII span replaced by redact_pii's token."""
+    return datagen.PII_RE.sub(lambda m: "<EMAIL>" if "@" in m.group() else "<PHONE>", text)
+
+
+def expected_output(corpus: dict) -> dict[int, str]:
+    """The documents one repetition must commit, id -> text, worked out
+    from the generator's ground truth and each stage's documented rule."""
     table = corpus["table"]
-    text_of = dict(zip(table.column("doc_id").to_pylist(), table.column("text").to_pylist()))
-    src_of = dict(zip(table.column("doc_id").to_pylist(), table.column("source").to_pylist()))
-    ids = [r["doc_id"] for r in rows]
-    kept = set(ids)
-    if not rows:
-        return ["no document survived"]
-    if len(kept) != len(ids):
+    ids = table.column("doc_id").to_pylist()
+    text = dict(zip(ids, table.column("text").to_pylist()))
+    src = dict(zip(ids, table.column("source").to_pylist()))
+    n_chars = dict(zip(ids, table.column("n_chars").to_pylist()))
+    # gate, then exact keep-best: per normalized text the most characters,
+    # ties to the smallest id
+    best: dict[str, int] = {}
+    for d in ids:
+        if reference.passes_gate(text[d]):
+            k = reference.normalized(text[d])
+            if k not in best or (n_chars[d], -d) > (n_chars[best[k]], -best[k]):
+                best[k] = d
+    live = set(best.values())
+    # near duplicates: a planted copy clusters with its original and the
+    # cluster keeps its smallest id
+    live -= {max(p) for p in corpus["near_pairs"] if set(p) <= live}
+    # decontamination: src0 goes, and so does any document sharing a word
+    # 6-gram with a surviving src0 document
+    ref = set().union(*(reference.word_ngrams(text[d], 6) for d in live if src[d] == "src0"))
+    live = {d for d in live
+            if src[d] != "src0" and not reference.word_ngrams(text[d], 6) & ref}
+    # temperature mixture: keep if md5_uniform(id) < (n_min / n_source)^(1 - alpha)
+    counts = Counter(src[d] for d in live)
+    m = min(n ** (1.0 - ALPHA) for n in counts.values())
+    live = {d for d in live if reference.md5_uniform(d) < m / counts[src[d]] ** (1.0 - ALPHA)}
+    return {d: redacted(text[d]) for d in sorted(live)}
+
+
+def check(corpus: dict, rows: list[dict]) -> list[str]:
+    """Differences between one committed repetition and its expected output
+    (empty when correct): the same documents, each with its input text
+    with only the PII spans replaced, packed in doc-id order per language."""
+    errors = []
+    want = expected_output(corpus)
+    got = {r["doc_id"]: r for r in rows}
+    if len(got) != len(rows):
         errors.append("a document was packed twice")
-    if not kept <= set(text_of):
-        errors.append("output holds ids that were never input")
-        return errors
-    for name in ("exact_pairs", "near_pairs"):
-        both = [p for p in corpus[name] if p[0] in kept and p[1] in kept]
-        if both:
-            errors.append(f"{len(both)} planted {name} survive")
-    if kept & corpus["junk"]:
-        errors.append("gate-failing documents survive")
-    src0_grams = set()
-    for d, s in src_of.items():
-        if s == "src0":
-            src0_grams |= reference.word_ngrams(text_of[d], 6)
-    if any(src_of[d] == "src0" for d in kept):
-        errors.append("src0 documents survive")
-    overlap = [d for d in kept if reference.word_ngrams(text_of[d], 6) & src0_grams]
-    if overlap:
-        errors.append(f"{len(overlap)} survivors share a 6-gram with src0")
-    if any(datagen.PII_RE.search(r["text"]) for r in rows):
-        errors.append("PII in the committed output")
+    missing, extra = sorted(want.keys() - got.keys()), sorted(got.keys() - want.keys())
+    if missing:
+        errors.append(f"{len(missing)} of {len(want)} expected survivors missing, "
+                      f"e.g. {missing[:5]}")
+    if extra:
+        errors.append(f"{len(extra)} documents survive that should not, e.g. {extra[:5]}")
+    changed = sorted(d for d in want.keys() & got.keys() if got[d]["text"] != want[d])
+    if changed:
+        errors.append(f"{len(changed)} survivors' text differs from the input with PII "
+                      f"redacted, e.g. doc {changed[0]}: {got[changed[0]]['text'][:80]!r}")
     for r in rows:
         if r["n_tokens"] != len(r["text"].split(" ")):
             errors.append(f"doc {r['doc_id']}: n_tokens does not match its text")
@@ -225,9 +252,13 @@ def _files(table_dir: str) -> int:
 
 class Curation:
     unit = "repetition"
-    #: repetitions take 23, 10.8, 8.8, 8.0, 7.9 s on a fresh session (300
-    #: docs, 4 cores): the third is the first near the level
-    warmup_units = 2
+    #: a fresh session's repetitions take 23.8, 10.5, 10.6, 9.9, 9.5 s
+    #: (400 docs, 4 cores): the cold one is the warm-up, and the slow
+    #: slope after it shows in the window's halves
+    warmup_units = 1
+    #: the window holds at least two repetitions, so its halves compare
+    min_units = 2
+    request_kinds = ("execute",)
 
     def __init__(self, bench, max_reps: int):
         self.b = bench
@@ -241,8 +272,6 @@ class Curation:
             self.corpora.append(corpus)
         self.table = os.path.join(bench.work, "curated")
         self.rep = 0
-        self.docs = 0
-        self.execute_s = 0.0
         register(bench.tracer)
 
     def close(self) -> None:
@@ -253,14 +282,11 @@ class Curation:
         tr, table = self.b.tracer, table or self.table
         corpus = self.corpora[self.rep]
         ex = executor(spark, tr)
-        with self.b.timed(request=True) as t:
+        with self.b.timed(kind="execute", docs=len(corpus["table"])) as t:
             with tr.span("plans.dag.PipelineExecutor.execute"):
                 report = ex.execute(definition(corpus["path"], table, self.rep))
         tr.count_global("plans.dag.retries", sum(log.attempts - 1 for log in report.node_logs))
         self.b.verify(f"curation rep {self.rep}", lambda: self._check(spark, report, corpus, table))
-        if self.b.measuring:
-            self.docs += len(corpus["table"])
-            self.execute_s += t.s
         self.rep += 1
         return t.s
 
@@ -274,7 +300,7 @@ class Curation:
         return "; ".join(errors) or None
 
     def describe(self) -> dict:
-        return {"docs_per_s": self.docs / self.execute_s}
+        return {}
 
     def finish(self, spark, table: str | None = None) -> None:
         pass
@@ -282,7 +308,7 @@ class Curation:
     def snapshot(self):
         return self.rep
 
-    def restore(self, snap) -> str:
-        """Rewind to ``snap``; returns the table to replay into."""
+    def restore(self, snap, name: str) -> str:
+        """Rewind to ``snap``; returns a fresh table, ``name``d, to replay into."""
         self.rep = snap
-        return self.table + "_replay"
+        return f"{self.table}_{name}"

@@ -11,7 +11,7 @@ import datagen
 
 TOP_K = 10
 QUERIES_PER_ROUND = 3
-POST_COMPACTION_QUERIES = 3
+POST_COMPACTION_QUERIES = 2
 DELETE_FRAC = 0.02
 
 

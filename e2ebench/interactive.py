@@ -1,13 +1,14 @@
 """interactive: one UI client running ad hoc SQL previews and search
 queries against a persisted index that is written between them.
 
-A round is the unit: ingest a fresh segment with ``write_search_index``,
-then the SQL templates in a seeded order with a BM25 query after every
-fourth, then a ``delete_from_index`` takedown batch. The run ends with
+A round is the unit, shaped like a TPC-H power run: every SQL template
+once, in a seeded order, with a BM25 query after every third one, plus
+one insert batch (``write_search_index`` of a fresh segment, first) and
+one delete batch (``delete_from_index``, last). The run ends with
 ``compact_index`` and queries on the compacted index (traced runs only,
-to keep a run within its time budget). Every preview is
-checked against DuckDB and every top-k against a pure-Python BM25 over
-the documents live at query time, outside the timed calls.
+to keep a run within its time budget). Every preview is checked against
+DuckDB and every top-k against a pure-Python BM25 over the documents live
+at query time, outside the timed calls.
 """
 
 from __future__ import annotations
@@ -21,15 +22,18 @@ import index_workload as ix
 import reference
 import sql_workload as sq
 
-QUERY_EVERY = 4
+QUERY_EVERY = len(sq.TEMPLATES) // ix.QUERIES_PER_ROUND
 N_ORDERS = 40_000
-DOCS_PER_SEGMENT = 2_000
+DOCS_PER_SEGMENT = 1_000
 
 
 class Interactive:
     unit = "round"
     #: the second round already runs at the level later rounds keep
     warmup_units = 1
+    min_units = 1
+    #: kinds whose medians make p50_s; the writes are "insert" and "delete"
+    request_kinds = ("sql", "search")
 
     def __init__(self, bench, max_rounds: int):
         self.b = bench
@@ -41,8 +45,6 @@ class Interactive:
         self.ref = reference.BM25()
         self.round = self.n_sql = self.n_query = 0
         self.ingested = []
-        self.ingest_s = self.delete_s = 0.0
-        self.ingest_docs = 0
 
     def close(self) -> None:
         self.oracle.close()
@@ -54,7 +56,7 @@ class Interactive:
         req = sq.request(self.b.seed, self.paths, self.n_sql)
         self.n_sql += 1
         tr = self.b.tracer
-        with self.b.timed(request=True) as t:
+        with self.b.timed(kind="sql") as t:
             dfs = {}
             for name, path in req.sources.items():
                 with tr.span("sources.readers.read_file"):
@@ -70,7 +72,7 @@ class Interactive:
     def _search(self, spark, index: str) -> float:
         terms = self.plan.queries[self.n_query]
         self.n_query += 1
-        with self.b.timed(request=True) as t:
+        with self.b.timed(kind="search") as t:
             with self.b.tracer.span("operators.indexing.bm25_search_persisted"):
                 got = ix.run_query(spark, index, terms)
         self.b.verify(f"bm25 {terms}", lambda: reference.check_topk(
@@ -84,14 +86,12 @@ class Interactive:
 
         tr, index = self.b.tracer, index or self.index
         path, table = self.plan.segments[self.round]
-        files = ix.index_bytes(index)[1]
-        with self.b.timed() as t_ingest:
+        files = ix.index_bytes(index)[1] if tr.enabled else 0
+        with self.b.timed(kind="insert", docs=len(table)) as t_ingest:
             with tr.span("operators.indexing.write_search_index"):
                 write_search_index(spark.read.parquet(path), index)
-                tr.count("files", ix.index_bytes(index)[1] - files)
-        if self.b.measuring:
-            self.ingest_s += t_ingest.s
-            self.ingest_docs += len(table)
+                if tr.enabled:
+                    tr.count("files", ix.index_bytes(index)[1] - files)
         self.ingested.append(table)
         for d, text in zip(table.column("doc_id").to_pylist(), table.column("text").to_pylist()):
             self.ref.add(d, text)
@@ -101,11 +101,9 @@ class Interactive:
             if (i + 1) % QUERY_EVERY == 0:
                 total += self._search(spark, index)
         ids = self.plan.deletes[self.round]
-        with self.b.timed() as t_del:
+        with self.b.timed(kind="delete", docs=len(ids)) as t_del:
             with tr.span("operators.indexing.delete_from_index"):
                 delete_from_index(spark, index, ids)
-        if self.b.measuring:
-            self.delete_s += t_del.s
         for d in ids:
             self.ref.delete(d)
         self.round += 1
@@ -114,9 +112,7 @@ class Interactive:
     def describe(self) -> dict:
         size, files = ix.index_bytes(self.index)
         return {"space_amp": size / ix.ingested_bytes(self.ingested),
-                "index_files": files,
-                "ingest_docs_per_s": self.ingest_docs / self.ingest_s,
-                "delete_s": self.delete_s}
+                "index_files": files}
 
     def finish(self, spark, index: str | None = None) -> None:
         """Compact, then query the compacted index (traced runs only)."""
@@ -135,14 +131,18 @@ class Interactive:
     # -- trace replay ------------------------------------------------------
 
     def snapshot(self):
-        """Everything the next round and the compaction read, so that a
-        traced replay does the same work on a copy of the index."""
-        copy_dir = f"{self.index}_replay"
-        shutil.copytree(self.index, copy_dir)
-        return (copy_dir, self.round, self.n_sql, self.n_query, copy.deepcopy(self.ref),
+        """Everything the next round and the compaction read, so that each
+        replay does the same work on its own copy of the index."""
+        saved = f"{self.index}_snapshot"
+        shutil.copytree(self.index, saved)
+        return (saved, self.round, self.n_sql, self.n_query, copy.deepcopy(self.ref),
                 list(self.ingested))
 
-    def restore(self, snap) -> str:
-        """Rewind to ``snap``; returns the index copy to replay on."""
-        copy_dir, self.round, self.n_sql, self.n_query, self.ref, self.ingested = snap
-        return copy_dir
+    def restore(self, snap, name: str) -> str:
+        """Rewind to ``snap``; returns a fresh copy of its index, ``name``d,
+        to replay on."""
+        saved, self.round, self.n_sql, self.n_query, ref, ingested = snap
+        self.ref, self.ingested = copy.deepcopy(ref), list(ingested)
+        target = f"{self.index}_{name}"
+        shutil.copytree(saved, target)
+        return target

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import math
 import re
 from collections import Counter
@@ -9,13 +10,35 @@ from collections import Counter
 _WS = re.compile(r"\s+")
 
 
+def normalized(text: str) -> str:
+    """Lowercase, whitespace runs collapsed to one space, trimmed."""
+    return _WS.sub(" ", text).strip().lower()
+
+
 def tokens(text: str) -> list[str]:
-    """Lowercase, whitespace-collapsed, trimmed, split on single spaces."""
-    return [t for t in _WS.sub(" ", text).strip().lower().split(" ") if t]
+    """The words of the normalized text."""
+    return [t for t in normalized(text).split(" ") if t]
+
+
+def passes_gate(text: str) -> bool:
+    """The curation DAG's quality gate, in the Gopher rules' integer form:
+    at least 20 words, mean word length in [3, 10], ``#`` plus ``...``
+    at most a tenth of the words, at least 80 % of the words alphabetic."""
+    toks = tokens(text)
+    n, chars = len(toks), sum(len(t) for t in toks)
+    symbols = text.count("#") + len(re.findall(r"\.\.\.", text))
+    alpha = sum(bool(re.search("[a-z]", t)) for t in toks)
+    return (n >= 20 and 3 * n <= chars <= 10 * n and 10 * symbols <= n
+            and 10 * alpha >= 8 * n)
+
+
+def md5_uniform(doc_id: int) -> float:
+    """The first 32 bits of md5(str(id)) as a fraction of 2^32."""
+    return int(hashlib.md5(str(doc_id).encode()).hexdigest()[:8], 16) / 4294967296.0
 
 
 def word_ngrams(text: str, n: int) -> set[str]:
-    toks = _WS.sub(" ", text).strip().lower().split(" ")
+    toks = normalized(text).split(" ")
     return {" ".join(toks[i:i + n]) for i in range(max(len(toks) - n + 1, 1))}
 
 

@@ -31,15 +31,16 @@ import sys  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-#: Fixed driver heap, committed and touched at start (-Xms = -Xmx with
-#: AlwaysPreTouch), so peak RSS does not depend on the host's RAM or on
-#: when the collector chose to grow the heap.
+#: Fixed driver heap (-Xms = -Xmx), so heap sizing does not depend on the
+#: host's RAM; pages are not pre-touched, so peak RSS follows what the
+#: program actually touches.
 HEAP = "2g"
 WORKLOADS = ("interactive", "curation_dag")
-MAX_UNITS = 8
+MAX_UNITS = 4
 
 END_TO_END = {
-    "setup_s": "s", "p50_s": "s", "qps": "1/s", "peak_rss_mb": "MB",
+    "setup_s": "s", "p50_s": "s", "qps": "1/s", "write_docs_per_s": "docs/s",
+    "peak_rss_mb": "MB",
 }
 
 _OPS = ("jobs", "task_s", "shuffle_write_mb", "spill_mb")
@@ -100,15 +101,18 @@ class Bench:
         self.attempted = self.failed = 0
         self.errors: list[str] = []
         self.measuring = False
-        self.latencies: list[float] = []
+        self.latencies: dict[str, list[float]] = {}
+        self.written: dict[str, list[float]] = {}
         self.unit_times: list[float] = []
+        self.calls = 0
         self.timed_s = 0.0
         self.check_s = 0.0
 
     @contextlib.contextmanager
-    def timed(self, request: bool = False):
-        """Time one blocking call; a ``request`` is a client-visible call
-        whose latency counts in the measured window."""
+    def timed(self, kind: str | None = None, docs: int = 0):
+        """Time one blocking client call. In the measured window its latency
+        is recorded under its ``kind``, and the ``docs`` a write call
+        writes are added to that kind's [docs, seconds] totals."""
         t = Timer()
         start = time.perf_counter()
         try:
@@ -116,8 +120,14 @@ class Bench:
         finally:
             t.s = time.perf_counter() - start
             self.timed_s += t.s
-            if request and self.measuring:
-                self.latencies.append(t.s)
+            if self.measuring:
+                self.calls += 1
+                if kind:
+                    self.latencies.setdefault(kind, []).append(t.s)
+                if docs:
+                    w = self.written.setdefault(kind, [0, 0.0])
+                    w[0] += docs
+                    w[1] += t.s
 
     def verify(self, what: str, check) -> None:
         """Run ``check`` (None when the output is correct, else a reason)."""
@@ -146,7 +156,7 @@ class Session:
         os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
         os.environ["SPARK_GRAFT_CPUS"] = str(self.cpus)
         os.environ["SPARK_GRAFT_EXTRA_JAVA_OPTS"] = (
-            f"-Xms{HEAP} -XX:+AlwaysPreTouch -XX:-UsePerfData -Djava.io.tmpdir={tmp}")
+            f"-Xms{HEAP} -XX:-UsePerfData -Djava.io.tmpdir={tmp}")
         self.spark = None
 
     def start(self, event_dir: str | None = None):
@@ -191,55 +201,66 @@ def measure(args, bench: Bench, session: Session, wl, host, phases: dict):
     spark = session.spark
     bench.measuring = True
     host.window_start()
-    while sum(bench.unit_times) < args.seconds and len(bench.unit_times) < MAX_UNITS:
+    while (len(bench.unit_times) < wl.min_units
+           or sum(bench.unit_times) < args.seconds and len(bench.unit_times) < MAX_UNITS):
         bench.unit_times.append(wl.run_unit(spark))
     host.window_end()
     bench.measuring = False
     extra = wl.describe()
     peak = session.peak_rss_mb()
-    from stats import halves, tail
+    from stats import geomean, halves, tail
 
-    lat = bench.latencies
-    tl = tail(lat)
-    first, second = halves(lat)
-    metrics = {"setup_s": phases["setup_s"], "p50_s": statistics.median(lat),
-               "qps": len(lat) / sum(bench.unit_times), "peak_rss_mb": peak}
-    desc = (f"{wl.unit}s: warm-up {fmt(phases['warmup'])}, measured {fmt(bench.unit_times)}; "
-            f"requests n={len(lat)} {fmt(sorted(lat))}, window halves p50 "
-            f"{first:.3f}/{second:.3f} s, "
-            + (f"tail p{tl[0]:.1f} = {tl[1]:.3f} s (10 beyond), " if tl and tl[0] > 50 else
-               "no tail percentile above p50 has 10 samples beyond it, ")
-            + ", ".join(f"{k}={v:.4g}" for k, v in extra.items()))
+    lat_of, written = bench.latencies, bench.written
+    metrics = {"setup_s": phases["setup_s"],
+               "p50_s": geomean([statistics.median(lat_of[k]) for k in wl.request_kinds]),
+               "qps": bench.calls / sum(bench.unit_times),
+               "write_docs_per_s": geomean([docs / s for docs, s in written.values()]),
+               "peak_rss_mb": peak}
+    parts = []
+    for kind, lat in lat_of.items():
+        tl = tail(lat)
+        parts.append(f"{kind} n={len(lat)} p50 {statistics.median(lat):.3f} s (halves "
+                     + "/".join(f"{h:.3f}" for h in halves(lat)) + ")"
+                     + (f" p{tl[0]:.1f} {tl[1]:.3f} s" if tl and tl[0] > 50 else ""))
+    desc = (f"{wl.unit}s: warm-up {fmt(phases['warmup'])}, measured {fmt(bench.unit_times)} "
+            f"(halves " + "/".join(f"{h:.2f}" for h in halves(bench.unit_times)) + "); "
+            + "; ".join(parts) + f"; {bench.calls} calls; written "
+            + ", ".join(f"{k} {docs} docs in {s:.2f} s" for k, (docs, s) in written.items())
+            + "".join(f", {k}={v:.4g}" for k, v in extra.items()))
     return metrics, desc
 
 
 def trace(bench: Bench, session: Session, wl, host, phases: dict):
-    """Traced: replay one unit (and the run's finish) untraced, then again
-    with the event log on and spans open, on a restarted session."""
+    """Traced: replay one unit from the same state twice, each on a
+    restarted session: untraced, then with the event log on and spans open,
+    followed by the run's finish."""
     import tracing
 
     host.window_start()
-    # the end-of-run calls (compaction) run once before the replays, so
-    # neither replay pays their first-call cost
+    # the end-of-run calls (compaction) run once before the replays, so the
+    # traced one does not pay their first-call cost
     wl.finish(session.spark)
     snap = wl.snapshot()
-    before = bench.timed_s
-    wl.run_unit(session.spark)
-    wl.finish(session.spark)
-    untraced_s = bench.timed_s - before
-    target = wl.restore(snap)
     events = os.path.join(bench.work, "events")
-    session.stop()
-    spark = session.start(events)
-    spark.range(1).count()
     tr = bench.tracer
-    tr.spark, tr.enabled = spark, True
-    before = bench.timed_s
-    with tr.span("bench.unit") as root:
-        wl.run_unit(spark, target)
-        wl.finish(spark, target)
-    traced_s = bench.timed_s - before
-    tr.enabled = False
+    tr.replaying = True
+    replay_s = {}
+    for name in ("untraced", "traced"):
+        target = wl.restore(snap, name)
+        session.stop()
+        spark = session.start(events if name == "traced" else None)
+        spark.range(1).count()
+        # the stopped context's objects are garbage now; collect them before
+        # the replay rather than inside it
+        spark._jvm.java.lang.System.gc()
+        tr.spark, tr.enabled = spark, name == "traced"
+        before = bench.timed_s
+        with tr.span("bench.replay") as root:
+            wl.run_unit(spark, target)
+            replay_s[name] = bench.timed_s - before
+            if name == "traced":
+                wl.finish(spark, target)
+        tr.enabled = False
     session.stop()
     host.window_end()
     log = next(os.path.join(events, f) for f in os.listdir(events))
@@ -249,13 +270,14 @@ def trace(bench: Bench, session: Session, wl, host, phases: dict):
     values = dict(tr.globals)
     values.update(tracing.run_metrics(jobs, tr.spans, root, session.cpus))
     values["session.get_spark.wall_s"] = phases["session_s"]
-    values["trace_overhead_frac"] = traced_s / untraced_s - 1
+    values["trace_overhead_frac"] = replay_s["traced"] / replay_s["untraced"] - 1
     for span, m in per_span.items():
         for key, v in m.items():
             values[f"{span}.{key}"] = v
     metrics = {name: float(values.get(name, 0.0)) for name in PER_LAYER}
-    desc = (f"traced replay of one {wl.unit}: {traced_s:.2f} s traced vs {untraced_s:.2f} s "
-            f"untraced; {len(jobs)} jobs, {len(tr.spans)} spans")
+    desc = (f"replays of one {wl.unit}, each on a restarted session: "
+            f"{replay_s['traced']:.2f} s traced vs {replay_s['untraced']:.2f} s untraced; "
+            f"{len(jobs)} jobs, {len(tr.spans)} spans")
     return metrics, desc
 
 
@@ -293,10 +315,11 @@ def run(args, work: str) -> int:
         session.stop()
         wl.close()
     correct = bench.failed == 0
-    print(f"e2ebench {args.workload} seed={args.seed}: driver heap {HEAP} (-Xms=-Xmx, "
-          f"pre-touched), local[{session.cpus}]; inputs generated in {gen_s:.2f} s; "
+    print(f"e2ebench {args.workload} seed={args.seed}: driver heap {HEAP} (-Xms=-Xmx), "
+          f"local[{session.cpus}]; inputs generated in {gen_s:.2f} s; "
           f"setup {phases['setup_s']:.2f} s = session {phases['session_s']:.2f} s + first "
-          f"action {phases['first_action_s']:.2f} s + warm-up; {desc}; {host.describe()}")
+          f"action {phases['first_action_s']:.2f} s + warm-up; {desc}; {host.describe()}; "
+          f"run wall {time.perf_counter() - T0:.1f} s")
     for err in bench.errors[:20]:
         print(f"WRONG OUTPUT {err}")
     print(json.dumps({"correct": correct, "attempted": bench.attempted, "failed": bench.failed,

@@ -103,16 +103,6 @@ TEMPLATES = {
            GROUP BY c_count ORDER BY custdist DESC, c_count DESC""",
         None, ("customer", "orders"),
         {"prio": ["1-URGENT", "2-HIGH", "4-NOT SPECIFIED"]}),
-    "discount_mix": (
-        """SELECT l_shipmode,
-                  sum(CASE WHEN l_discount > {disc} THEN 1 ELSE 0 END) AS high_disc,
-                  sum(CASE WHEN l_discount <= {disc} THEN 1 ELSE 0 END) AS low_disc,
-                  avg(l_tax) AS avg_tax
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           WHERE o_orderstatus = '{st}'
-           GROUP BY l_shipmode ORDER BY l_shipmode""",
-        None, ("lineitem", "orders"),
-        {"disc": [0.03, 0.06], "st": ["F", "O", "P"]}),
     "heavy_buyers": (
         """SELECT user_id, count(*) AS purchases, sum(amount) AS spent
            FROM events WHERE event_type = '{et}'
@@ -120,14 +110,6 @@ TEMPLATES = {
            ORDER BY purchases DESC, user_id LIMIT 50""",
         None, ("events",),
         {"et": ["purchase", "cart", "click"], "n": [2, 3]}),
-    "segment_year_orders": (
-        """SELECT year(o_orderdate) AS y, o_orderstatus, count(*) AS n,
-                  avg(o_totalprice) AS avg_price
-           FROM orders JOIN customer ON o_custkey = c_custkey
-           WHERE c_mktsegment = '{seg}' AND c_acctbal > {bal}
-           GROUP BY year(o_orderdate), o_orderstatus ORDER BY y, o_orderstatus""",
-        None, ("orders", "customer"),
-        {"seg": ["FURNITURE", "HOUSEHOLD", "BUILDING"], "bal": [0, 5000]}),
 }
 
 

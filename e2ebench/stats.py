@@ -6,6 +6,7 @@ diagnosis only; no metric is ever adjusted by them.
 
 from __future__ import annotations
 
+import math
 import os
 import statistics
 import time
@@ -72,3 +73,7 @@ def cpu_probe() -> float:
             acc += i * i % 7
         best = min(best, time.perf_counter() - t)
     return best
+
+
+def geomean(values: list[float]) -> float:
+    return math.exp(sum(math.log(v) for v in values) / len(values))

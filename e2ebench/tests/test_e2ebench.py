@@ -163,6 +163,48 @@ def test_corpus_plants_what_it_reports():
     assert sum(bool(datagen.PII_RE.search(x)) for x in text.values()) >= 400 // 20
 
 
+def test_expected_output_follows_each_stage_rule():
+    import curation_workload as cw
+
+    corpus = datagen.make_corpus(5, 400, 1000, datagen.TextSource())
+    t = corpus["table"]
+    text = dict(zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist()))
+    src = dict(zip(t.column("doc_id").to_pylist(), t.column("source").to_pylist()))
+    want = cw.expected_output(corpus)
+    kept = set(want)
+    assert not kept & corpus["junk"] and not kept & corpus["contaminated"]
+    assert not any(src[d] == "src0" for d in kept)
+    for a, b in corpus["exact_pairs"]:
+        assert b not in kept or a not in kept
+    assert not any(b in kept for _, b in corpus["near_pairs"])
+    # the mixture sheds part of the larger sources, not everything
+    assert 0.3 * len(text) < len(kept) < 0.9 * len(text)
+    pii = [d for d in kept if datagen.PII_RE.search(text[d])]
+    assert pii and all(("<EMAIL>" in want[d]) or ("<PHONE>" in want[d]) for d in pii)
+    assert all(want[d] == text[d] for d in kept if d not in pii)
+    # a survivor set that differs by one document, or one blanked text, is wrong
+    rows, before = [], {}
+    for d in sorted(kept):
+        lang = t.column("lang").to_pylist()[d - 1000]
+        n = len(want[d].split(" "))
+        seq = before.get(lang, 0)
+        rows.append({"doc_id": d, "lang": lang, "seq_id": seq // cw.BUDGET,
+                     "n_tokens": n, "text": want[d]})
+        before[lang] = seq + n
+    assert cw.check(corpus, rows) == []
+    assert "missing" in cw.check(corpus, rows[1:])[0]
+    blank = [dict(rows[0], text="", n_tokens=1)] + rows[1:]
+    assert any("text differs" in e for e in cw.check(corpus, blank))
+
+
+def test_gate_reference_counts_like_the_gopher_rules():
+    assert reference.passes_gate(" ".join(["the", "cat", "of", "word"] * 5))
+    assert not reference.passes_gate(" ".join(["the", "cat"] * 9))  # 18 words
+    assert not reference.passes_gate(" ".join(["# ... ##"] * 10))
+    assert not reference.passes_gate(" ".join(["ab"] * 30))  # mean length 2
+    assert reference.md5_uniform(7) == int("8f14e45f", 16) / 2 ** 32
+
+
 # -- BM25 reference ------------------------------------------------------------
 
 def test_bm25_matches_a_hand_computed_case():

@@ -29,10 +29,13 @@ class Span:
 
 class Tracer:
     """Records spans when ``enabled``; otherwise every method is a no-op, so
-    untraced runs take the same code path minus the bookkeeping."""
+    untraced runs take the same code path minus the bookkeeping.
+    ``replaying`` marks the two replays of a traced run, which do the same
+    work whether or not spans are recorded."""
 
     def __init__(self, enabled: bool = False, spark=None):
         self.enabled = enabled
+        self.replaying = False
         self.spark = spark
         self.spans: list[Span] = []
         self.globals: dict[str, float] = {}
