@@ -22,11 +22,14 @@ T0 = time.perf_counter()
 
 import argparse  # noqa: E402
 import contextlib  # noqa: E402
+import ctypes  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import resource  # noqa: E402
 import shutil  # noqa: E402
+import signal  # noqa: E402
 import statistics  # noqa: E402
+import subprocess  # noqa: E402
 import sys  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -185,6 +188,67 @@ class Session:
             self.spark.stop()
             self.spark = None
 
+    def close(self) -> None:
+        """Stop the session and end the gateway JVM, waiting until it has
+        exited (PySpark leaves it running until this process exits)."""
+        self.stop()
+        from pyspark import SparkContext
+
+        gateway = SparkContext._gateway
+        if gateway is None:
+            return
+        SparkContext._gateway = SparkContext._jvm = None
+        with contextlib.suppress(Exception):
+            gateway.shutdown()
+        proc = getattr(gateway, "proc", None)
+        if proc is not None:
+            proc.stdin.close()  # the JVM exits on EOF of its stdin
+            try:
+                proc.wait(timeout=30)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+
+
+def become_subreaper() -> None:
+    """Make processes orphaned below this one (the Python workers the Spark
+    JVM forks) its children, so that ``reap_children`` can wait for them."""
+    PR_SET_CHILD_SUBREAPER = 36
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def children() -> list[int]:
+    me, pids = os.getpid(), []
+    for entry in os.listdir("/proc"):
+        if entry.isdigit():
+            try:
+                with open(f"/proc/{entry}/stat") as f:
+                    ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            except (OSError, IndexError, ValueError):
+                continue
+            if ppid == me:
+                pids.append(int(entry))
+    return pids
+
+
+def reap_children(timeout: float = 30.0) -> None:
+    """Wait until every child of this process has ended; kill what is still
+    running after ``timeout`` seconds."""
+    deadline = time.monotonic() + timeout
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid:
+            continue
+        if time.monotonic() > deadline:
+            for pid in children():
+                with contextlib.suppress(OSError):
+                    os.kill(pid, signal.SIGKILL)
+            deadline = float("inf")
+        time.sleep(0.05)
+
 
 def make_workload(name: str, bench: Bench):
     if name == "interactive":
@@ -312,7 +376,7 @@ def run(args, work: str) -> int:
             metrics, desc = measure(args, bench, session, wl, host, phases)
             units = END_TO_END
     finally:
-        session.stop()
+        session.close()
         wl.close()
     correct = bench.failed == 0
     print(f"e2ebench {args.workload} seed={args.seed}: driver heap {HEAP} (-Xms=-Xmx), "
@@ -341,9 +405,11 @@ def main(argv=None) -> int:
     base = os.path.join(ROOT, ".bench_work")
     work = os.path.join(base, f"{args.workload}-{os.getpid()}")
     os.makedirs(work)
+    become_subreaper()
     try:
         return run(args, work)
     finally:
+        reap_children()
         shutil.rmtree(work, ignore_errors=True)
         with contextlib.suppress(OSError):
             os.rmdir(base)
